@@ -8,9 +8,10 @@ is assembled with vectorized scatter/gather.
 
 Why this exists: profiling showed the *pandas* conversion around the
 scalar codec — every ``dados`` element became a Python dict — cost ~9×
-the actual byte-twiddling. This module is the Arrow-native fast path
-used by ``arrow_udf`` (Spark 4.1); the scalar codec remains the
-reference implementation, the property-test oracle, and the fallback.
+the actual byte-twiddling. This module is the engine's only Spark Avro
+codec path, wrapped as ``arrow_udf`` (Spark 4.1) in ``avro_codec``; the
+scalar codec remains the reference implementation, the property-test
+oracle, and :func:`decode_batch`'s row-serial branch for tall messages.
 
 Techniques (all O(batch) numpy, no per-row Python):
 

@@ -48,6 +48,17 @@ def test_json_serde_is_jvm_only(spark):
     assert "EvalPython" not in plan  # pure to_json/from_json
 
 
+def test_producer_report_has_no_join(spark):
+    """The report's clock (EPOCH0 + sequencia) is a function of the row,
+    so the producer report reads the generator once: no join back to
+    the messages, no second generation."""
+    from teste_carga_avro_vs_json_spark import cli
+
+    plan = _plan(cli._report(generator.mensagens(spark, 500, tamanho_kb=1), 100))
+    assert "Join" not in plan
+    assert plan.count("Range") == 1
+
+
 def test_tail_n_join_is_broadcast(spark):
     msgs = generator.mensagens(spark, 500, tamanho_kb=1).select("sequencia")
     transporte = routing.with_offsets(routing.route(msgs, 18))

@@ -3,6 +3,8 @@ determinism."""
 
 import pyspark.sql.functions as F
 
+from teste_carga_avro_vs_json_spark.functions import avro_vec
+from teste_carga_avro_vs_json_spark.functions.avro_codec import decode_mensagem, encode_mensagem
 from teste_carga_avro_vs_json_spark.operators import serde
 from teste_carga_avro_vs_json_spark.sources import generator
 
@@ -43,12 +45,30 @@ def test_json_roundtrip_lossless(spark):
 
 
 def test_avro_roundtrip_lossless(spark):
-    msgs = _msgs(spark)
-    back = serde.avro_roundtrip(msgs)
-    # nullability flips through the pandas UDF; compare values + names
-    assert back.columns == msgs.columns
-    assert back.exceptAll(msgs).count() == 0
-    assert msgs.exceptAll(back).count() == 0
+    """The one Spark codec path, pinned by value to the scalar reference:
+    encoded bytes equal ``encode_mensagem`` per row; decoded rows equal
+    ``decode_mensagem`` and the input. At 64 KB every message is above
+    ``avro_vec._TALL_MSG_BYTES``, so decode takes the row-serial branch."""
+    for kb, n in ((1, 20), (64, 6)):
+        msgs = generator.mensagens(spark, n, tamanho_kb=kb)
+        rows = {r.sequencia: r.asDict(recursive=True) for r in msgs.collect()}
+        enc = serde.avro_encode(msgs)
+        values = {r.sequencia: bytes(r.valor_avro) for r in enc.collect()}
+        assert values.keys() == rows.keys()
+        for seq, v in values.items():
+            assert v == encode_mensagem(rows[seq])
+            assert decode_mensagem(v) == rows[seq]
+        tall = min(len(v) for v in values.values()) > avro_vec._TALL_MSG_BYTES
+        assert tall == (kb == 64)
+
+        decoded = serde.avro_decode(enc).collect()
+        assert {r.sequencia: r.asDict(recursive=True) for r in decoded} == rows
+        back = serde.avro_roundtrip(msgs)
+        # nullability flips through the arrow_udf; compare values + names
+        assert back.columns == msgs.columns
+        assert {r.sequencia: r.asDict(recursive=True) for r in back.collect()} == rows
+        assert back.exceptAll(msgs).count() == 0
+        assert msgs.exceptAll(back).count() == 0
 
 
 def test_payload_sizes_positive(spark):
